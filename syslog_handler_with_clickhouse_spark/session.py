@@ -30,6 +30,10 @@ RUNTIME_CONF = {
     # still (correctly) re-sorted, so the flag is safe for every other
     # bucketed read.
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+    # INT64 timestamps carry footer min/max (INT96 has none), which the
+    # snapshot store's per-file bounds are read from.  Only the session
+    # conf takes effect; a DataFrameWriter option does not.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 
 

@@ -13,7 +13,18 @@ its smallest honest form:
 - readers resolve the latest manifest ONCE and then read only the files it
   names — they never observe a half-written snapshot, and concurrent
   commits never disturb an in-flight read (snapshot isolation);
-- old snapshots remain readable (time travel) until vacuumed.
+- old snapshots remain readable (time travel) until vacuumed;
+- the manifest records the written schema, so readers declare it instead
+  of running a footer-inference job, and appends must match it.
+
+Per-file pruning stats sit in Parquet beside the manifests.  Min/max
+bounds are read on the driver from the footers the data write just
+produced (pyarrow, new files only), so a ``stat_cols`` commit runs no
+job beyond the write itself.  Timestamps get bounds because the session
+writes them as INT64 microseconds (``session.RUNTIME_CONF``): parquet-mr
+records no min/max for the INT96 default.  Bounds are advisory — exact,
+wider, or absent (then the file is always read), never narrower.  Bloom
+and token-bloom bitsets still need the data, and cost one Spark job.
 
 At 100 TB the same design holds: manifests carry per-file stats for
 pruning and live in an object store where rename-or-put-if-absent provides
@@ -25,10 +36,13 @@ retry").
 from __future__ import annotations
 
 import json
+import math
 import os
 import uuid
+from datetime import datetime
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType, TimestampType
 
 
 def _manifest_dir(path: str) -> str:
@@ -64,8 +78,11 @@ def _commit(
     note: str,
     batch_ids: list[int] | None = None,
     stats_files: list[str] | None = None,
+    schema: str | None = None,
 ) -> None:
-    """Publish manifest ``version`` atomically (write temp + rename)."""
+    """Publish manifest ``version`` atomically (write temp + rename).
+    ``schema`` is the written frame's ``schema.json()``: readers declare
+    it instead of inferring it from the footers."""
     mdir = _manifest_dir(path)
     os.makedirs(mdir, exist_ok=True)
     manifest = {
@@ -74,6 +91,7 @@ def _commit(
         "note": note,
         "batch_ids": batch_ids or [],
         "stats_files": sorted(stats_files or []),
+        "schema": schema,
     }
     tmp = os.path.join(mdir, f".v{version}.json.{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as f:
@@ -116,15 +134,15 @@ def _token_split(v) -> list[str]:
     return _re.findall(r"[0-9a-z]+", str(v).lower())
 
 
-# Relational stats-manifest schema (round-13: the per-file stats/bloom
-# payload is PARQUET BESIDE THE DATA, written by executors and pruned by
-# a Spark filter — the driver never holds a bloom bitset; the round-12
-# verdict's "what's wrong #2" was the prior design's .collect() of
-# O(files) × ~3 KiB JSON blobs into a driver dict).  Min/max bounds keep
-# their types in three lanes — integral stays BIGINT-exact (a double
-# lane alone could round an int64 bound past 2^53 and wrongly exclude a
-# file), floats in the double lane, strings in the string lane; column
-# types outside the lanes record no stats and are always read.
+# Relational stats-manifest schema: the per-file bounds/bloom payload is
+# PARQUET BESIDE THE DATA, one row per data file, pruned by a Spark filter
+# — the driver never holds a bloom bitset.  Min/max bounds keep their
+# types in three lanes — integral and timestamp (epoch microseconds) stay
+# BIGINT-exact (a double lane alone could round an int64 bound past 2^53
+# and wrongly exclude a file), floats in the double lane, strings in the
+# string lane; column types outside the lanes record no stats and are
+# always read.  A stats directory may hold several files: the footer
+# bounds and the bloom job's rows; columns a file lacks read as null.
 _STATS_SCHEMA = (
     "name string, "
     "stats_i map<string, array<bigint>>, "
@@ -135,71 +153,124 @@ _STATS_SCHEMA = (
 )
 
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
-_FLOAT_TYPES = ("float", "double")
+_LANES = {
+    **dict.fromkeys(_INTEGRAL_TYPES + ("timestamp",), "stats_i"),
+    "float": "stats_d",
+    "double": "stats_d",
+    "string": "stats_s",
+}
+
+
+def _column_types(schema: StructType) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
+def _footer_bound(md, j: int, spark_type: str) -> list | None:
+    """[min, max] of column ``j`` over every row group of one file's
+    Parquet footer ``md``, or None (must-read) when a row group holding a
+    non-null value has no usable bound."""
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        s = md.row_group(rg).column(j).statistics
+        rows = md.row_group(rg).num_rows
+        if s is not None and s.has_null_count and s.null_count == rows:
+            continue  # all-null row group: nothing to bound
+        if s is None or not s.has_min_max:
+            return None  # INT96 timestamps, binary values over 4 KiB, ...
+        if spark_type == "timestamp":
+            if json.loads(s.logical_type.to_json()).get("timeUnit") != "microseconds":
+                return None
+            a, b = s.min_raw, s.max_raw
+        elif spark_type == "string":
+            try:  # Spark strings may hold bytes that are not UTF-8
+                a, b = s.min_raw.decode("utf-8"), s.max_raw.decode("utf-8")
+            except UnicodeDecodeError:
+                return None
+        else:
+            a, b = s.min, s.max
+            if isinstance(a, float) and (math.isnan(a) or math.isnan(b)):
+                return None  # NaN sorts above every number in Spark
+        lo = a if lo is None else min(lo, a)
+        hi = b if hi is None else max(hi, b)
+    return None if lo is None else [lo, hi]
+
+
+def _write_footer_bounds(
+    out_dir: str, files: list[str], schema: StructType, stat_cols: list[str]
+) -> bool:
+    """Per-file min/max of ``stat_cols`` for the just-written ``files``,
+    read on the driver from their Parquet footers (no Spark job, no data
+    re-read) and written as one stats Parquet file into ``out_dir``.
+    Returns False when no requested column has a stats lane."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    types = _column_types(schema)
+    cols = {c: types[c] for c in stat_cols if types.get(c) in _LANES}
+    if not cols:
+        return False
+    lane_types = {"stats_i": pa.int64(), "stats_d": pa.float64(), "stats_s": pa.string()}
+    rows: dict[str, list] = {"name": [], **{lane: [] for lane in lane_types}}
+    for f in files:
+        md = pq.read_metadata(f)
+        idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+        bounds = {c: _footer_bound(md, idx[c], t) for c, t in cols.items()}
+        rows["name"].append(os.path.basename(f))
+        for lane in lane_types:
+            rows[lane].append(
+                [(c, b) for c, b in bounds.items() if b and _LANES[cols[c]] == lane]
+            )
+    arrow = pa.schema(
+        [("name", pa.string())]
+        + [(k, pa.map_(pa.string(), pa.list_(t))) for k, t in lane_types.items()]
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    pq.write_table(pa.table(rows, schema=arrow), os.path.join(out_dir, "bounds.parquet"))
+    return True
 
 
 def _write_stats_manifest(
     spark,
-    path: str,
-    names: list[str],
-    stat_cols: list[str],
+    out_dir: str,
+    files: list[str],
+    schema: StructType,
     bloom_cols: list[str],
-    token_cols: list[str] | None = None,
-) -> str | None:
-    """Per-file min/max + bloom bitsets, computed in ONE distributed job
-    and PERSISTED AS PARQUET under ``_manifests/`` — one row per data
-    file.  Returns the stats directory's name (manifest-relative), or
-    None when no requested column exists.
+    token_cols: list[str],
+) -> bool:
+    """Per-file bloom and token-bloom bitsets for ``files``, computed in
+    ONE distributed job and written by the executors into ``out_dir`` —
+    one row per data file.  Returns False when no requested column
+    exists.  Min/max bounds are not computed here: they come from the
+    footers (``_write_footer_bounds``) and cost no job.
 
-    The committed files are re-read grouped by ``input_file_name()``,
-    each group (= one file) reduces to a single row inside an executor,
-    and the rows are WRITTEN by the executors: at 10^6 files the driver
-    neither scans table data nor holds a single bloom bitset — commit
-    driver memory is O(1) in the stats payload (the file-NAME list for
-    the JSON pointer manifest is the only O(files) driver state left,
-    and it's the list ``spark.read.parquet`` needs anyway)."""
+    The files are re-read grouped by ``input_file_name()``, each group
+    (= one file) reduces to a single row inside an executor, and the
+    rows are WRITTEN by the executors: at 10^6 files the driver neither
+    scans table data nor holds a single bloom bitset."""
     from pyspark.sql import functions as F
 
-    ddir = _data_dir(path)
-    paths = [os.path.join(ddir, n) for n in names]
-    src = spark.read.parquet(*paths)
-    s_cols = [c for c in (stat_cols or []) if c in src.columns]
-    b_cols = [c for c in (bloom_cols or []) if c in src.columns]
-    t_cols = [c for c in (token_cols or []) if c in src.columns]
-    if not (s_cols or b_cols or t_cols):
-        return None
+    b_cols = [c for c in bloom_cols if c in schema.names]
+    t_cols = [c for c in token_cols if c in schema.names]
+    if not (b_cols or t_cols):
+        return False
     bloom_hash, bits_total = _bloom_hashes, _BLOOM_BITS
-    types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
     # pandas represents a nullable int column as float64 — str(5.0) would
     # then hash differently from the read side's str(5), silently creating
     # bloom FALSE NEGATIVES.  Track integral columns and round-trip
     # through int() before hashing.
-    integral = {c for c in b_cols if types.get(c) in _INTEGRAL_TYPES}
-    src = src.select(*sorted(set(s_cols) | set(b_cols) | set(t_cols))).withColumn(
-        "_file", F.input_file_name()
+    integral = {
+        c for c in b_cols if schema[c].dataType.simpleString() in _INTEGRAL_TYPES
+    }
+    src = (
+        spark.read.schema(schema)
+        .parquet(*files)
+        .select(*sorted(set(b_cols) | set(t_cols)))
+        .withColumn("_file", F.input_file_name())
     )
 
     def per_file(key, pdf):
         import pandas as pd
 
-        fname = os.path.basename(key[0])
-        st_i: dict = {}
-        st_d: dict = {}
-        st_s: dict = {}
-        for c in s_cols:
-            col = pdf[c].dropna()
-            if len(col) == 0:
-                continue  # all-null → no stats row entry, must-read
-            lo, hi = col.min(), col.max()
-            t = types.get(c)
-            if t in _INTEGRAL_TYPES:
-                st_i[c] = [int(lo), int(hi)]
-            elif t in _FLOAT_TYPES:
-                st_d[c] = [float(lo), float(hi)]
-            elif t == "string":
-                st_s[c] = [str(lo), str(hi)]
-            # other types (timestamps, decimals, ...) record nothing:
-            # the read side keeps files with no recorded bound
         blooms: dict = {}
         for c in b_cols:
             bits = bytearray(bits_total // 8)
@@ -222,25 +293,21 @@ def _write_stats_manifest(
             tblooms[c] = bytes(bits).hex()
         return pd.DataFrame(
             {
-                "name": [fname],
-                "stats_i": [st_i],
-                "stats_d": [st_d],
-                "stats_s": [st_s],
+                "name": [os.path.basename(key[0])],
                 "blooms": [blooms],
                 "tblooms": [tblooms],
             }
         )
 
-    stats_name = f"stats_{uuid.uuid4().hex}"
-    out_dir = os.path.join(_manifest_dir(path), stats_name)
-    os.makedirs(_manifest_dir(path), exist_ok=True)
     (
         src.groupBy("_file")
-        .applyInPandas(per_file, _STATS_SCHEMA)
-        .write.mode("overwrite")
+        .applyInPandas(
+            per_file, "name string, blooms map<string, string>, tblooms map<string, string>"
+        )
+        .write.mode("append")
         .parquet(out_dir)
     )
-    return stats_name
+    return True
 
 
 def _write_data_files(
@@ -251,10 +318,10 @@ def _write_data_files(
     token_bloom_cols: list[str] | None = None,
 ) -> tuple[list[dict], str | None]:
     """Write df's rows as new immutable files; return (manifest entries
-    ``[{"name": ...}]``, stats-manifest directory name or None).  Stats/
-    bloom extraction runs as a Spark job whose OUTPUT is Parquet beside
-    the data (see ``_write_stats_manifest``) — the driver's only
-    per-file work is the rename and the name list."""
+    ``[{"name": ...}]``, stats-manifest directory name or None).  Min/max
+    bounds come from the new files' footers on the driver, so a
+    ``stat_cols``-only commit runs only the data write's jobs; blooms
+    add one Spark job whose OUTPUT is Parquet beside the data."""
     ddir = _data_dir(path)
     os.makedirs(ddir, exist_ok=True)
     staging = os.path.join(path, f"_staging_{uuid.uuid4().hex}")
@@ -270,14 +337,22 @@ def _write_data_files(
     shutil.rmtree(staging)
     stats_name = None
     if out and (stat_cols or bloom_cols or token_bloom_cols):
-        stats_name = _write_stats_manifest(
-            df.sparkSession,
-            path,
-            [e["name"] for e in out],
-            stat_cols or [],
-            bloom_cols or [],
-            token_bloom_cols or [],
-        )
+        stats_name = f"stats_{uuid.uuid4().hex}"
+        out_dir = os.path.join(_manifest_dir(path), stats_name)
+        files = [os.path.join(ddir, e["name"]) for e in out]
+        wrote = [
+            _write_footer_bounds(out_dir, files, df.schema, stat_cols or []),
+            _write_stats_manifest(
+                df.sparkSession,
+                out_dir,
+                files,
+                df.schema,
+                bloom_cols or [],
+                token_bloom_cols or [],
+            ),
+        ]
+        if not any(wrote):
+            stats_name = None
     return out, stats_name
 
 
@@ -290,12 +365,18 @@ def write_snapshot(
     bloom_cols: list[str] | None = None,
     token_bloom_cols: list[str] | None = None,
 ) -> int:
-    """Commit df as the next snapshot.  ``append`` keeps prior files;
-    ``overwrite`` starts the file list fresh.  ``stat_cols`` records
-    per-file min/max in the manifest for read-time file pruning;
-    ``bloom_cols`` additionally records a 1 KiB per-file bloom bitset for
-    EQUALITY pruning on high-cardinality key columns where ranges overlap
-    everywhere (the ClickHouse ``bloom_filter`` skipping-index analogue);
+    """Commit df as the next snapshot.  ``append`` keeps prior files and
+    must match the recorded schema's column names and types (else
+    ``ValueError`` naming the column; nullability may differ);
+    ``overwrite`` starts the file list and schema fresh.  ``stat_cols``
+    records per-file min/max for read-time file pruning, read from the
+    new files' Parquet footers on the driver — no Spark job beyond the
+    data write.  Bounds are advisory: exact, wider, or absent (INT96
+    timestamps, NaN floats, strings over 4 KiB, all-null files), never
+    narrower.  ``bloom_cols`` additionally records a 1 KiB per-file
+    bloom bitset for EQUALITY pruning on high-cardinality key columns
+    where ranges overlap everywhere (the ClickHouse ``bloom_filter``
+    skipping-index analogue), in one extra Spark job;
     ``token_bloom_cols`` records a TOKEN bloom per file over the
     lowercase-alphanumeric tokens of a string column — the ClickHouse
     ``tokenbf_v1`` analogue that lets full-text containment queries
@@ -316,6 +397,8 @@ def write_snapshot(
         if mode != "overwrite":
             files = m["files"]
             prior_stats = m.get("stats_files", [])
+            if m.get("schema"):
+                _check_append_schema(path, m["schema"], df.schema)
     new_files, stats_name = _write_data_files(
         df, path, stat_cols, bloom_cols, token_bloom_cols
     )
@@ -328,8 +411,22 @@ def write_snapshot(
         note=mode,
         batch_ids=ids,
         stats_files=prior_stats + ([stats_name] if stats_name else []),
+        schema=df.schema.json(),
     )
     return version
+
+
+def _check_append_schema(path: str, recorded: str, schema: StructType) -> None:
+    """Appends keep the recorded column names and types; nullability may
+    differ (a stream's micro-batch and a batch frame of the same rows do)."""
+    old = _column_types(StructType.fromJson(json.loads(recorded)))
+    new = _column_types(schema)
+    for c in sorted(old.keys() | new.keys()):
+        if old.get(c) != new.get(c):
+            raise ValueError(
+                f"append to {path}: column {c!r} is {new.get(c) or 'missing'}, "
+                f"the snapshot has {old.get(c) or 'no such column'}"
+            )
 
 
 def _prune_legacy_entries(
@@ -412,7 +509,7 @@ def _excludable_names(
 
     from pyspark.sql import functions as F
 
-    m = spark.read.parquet(
+    m = spark.read.schema(_STATS_SCHEMA).parquet(
         *[os.path.join(_manifest_dir(path), s) for s in stats_files]
     )
     conds = []
@@ -427,6 +524,11 @@ def _excludable_names(
         lanes = ["stats_i", "stats_d"] if is_num else []
         if isinstance(lo, str) and isinstance(hi, str):
             lanes = ["stats_s"]
+        if isinstance(lo, datetime) and isinstance(hi, datetime):
+            # timestamp bounds are epoch µs on the BIGINT lane; the
+            # conversion is Spark's own (naive = local time)
+            lo, hi = TimestampType().toInternal(lo), TimestampType().toInternal(hi)
+            lanes = ["stats_i"]
         for lane in lanes:
             b = F.try_element_at(F.col(lane), F.lit(col))
             file_lo = F.try_element_at(b, F.lit(1))
@@ -467,7 +569,10 @@ def read_snapshot(
     where ranges don't (uniformly distributed keys overlap every file's
     [min,max]).  False negatives are impossible (write/read share the
     hash function); false positives only cost an extra file read.
-    Pruning is advisory: apply the real filter on the returned frame."""
+    Pruning is advisory: apply the real filter on the returned frame.
+    A ``Timestamp`` column prunes on ``datetime`` bounds only.  When the
+    manifest records the schema the files are read with it declared (no
+    footer-inference job); older manifests infer it as before."""
     v = latest_version(path) if version is None else version
     if v == 0:
         raise FileNotFoundError(f"no snapshots at {path}")
@@ -483,6 +588,20 @@ def read_snapshot(
     entries = all_entries
     if token is not None and len(_token_split(token[1])) != 1:
         raise ValueError("token pruning takes exactly ONE alphanumeric token")
+    reader = spark.read
+    if manifest.get("schema"):
+        schema = StructType.fromJson(json.loads(manifest["schema"]))
+        reader = reader.schema(schema)
+        if prune is not None:
+            col, lo, hi = prune
+            kind = _column_types(schema).get(col)
+            is_ts = isinstance(lo, datetime) and isinstance(hi, datetime)
+            # timestamps (as epoch µs) and integers share the BIGINT lane
+            if _LANES.get(kind) == "stats_i" and (kind == "timestamp") != is_ts:
+                raise ValueError(
+                    f"prune on {col!r} ({kind}) takes "
+                    f"{'datetime' if kind == 'timestamp' else 'numeric'} bounds"
+                )
     if prune is not None or bloom is not None or token is not None:
         legacy = any(
             k in e for e in all_entries for k in ("stats", "blooms", "tblooms")
@@ -502,10 +621,10 @@ def read_snapshot(
         if not all_entries:
             raise FileNotFoundError(f"snapshot v{v} at {path} has no data files")
         # everything pruned: empty frame with the snapshot's schema
-        return spark.read.parquet(
+        return reader.parquet(
             *[os.path.join(ddir, e["name"]) for e in all_entries]
         ).limit(0)
-    return spark.read.parquet(*[os.path.join(ddir, e["name"]) for e in entries])
+    return reader.parquet(*[os.path.join(ddir, e["name"]) for e in entries])
 
 
 def rewrite_snapshot(spark, path: str, transform, stat_cols: list[str] | None = None) -> int:
@@ -513,8 +632,8 @@ def rewrite_snapshot(spark, path: str, transform, stat_cols: list[str] | None = 
     read latest, apply ``transform(df) -> df``, write new files, publish.
     The previous snapshot stays intact and readable throughout."""
     base = latest_version(path)
-    cur = read_snapshot(spark, path)
-    new_files, stats_name = _write_data_files(transform(cur), path, stat_cols)
+    out = transform(read_snapshot(spark, path))
+    new_files, stats_name = _write_data_files(out, path, stat_cols)
     version = base + 1
     _commit(
         path,
@@ -523,6 +642,7 @@ def rewrite_snapshot(spark, path: str, transform, stat_cols: list[str] | None = 
         note="rewrite",
         batch_ids=_read_manifest(path, base).get("batch_ids", []),
         stats_files=[stats_name] if stats_name else [],
+        schema=out.schema.json(),
     )
     return version
 

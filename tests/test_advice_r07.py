@@ -2,14 +2,14 @@
 
 1. KMV sketch must NOT count NULL keys as a distinct value
    (operators/sketches.py:_kmv_hash_col).
-2. snapshot_diff rejects reversed version ranges
-   (sources/snapshots.py:snapshot_diff).
-3. dict functions never clobber user columns that collide with their
+2. dict functions never clobber user columns that collide with their
    temp names (functions/dicts.py).
-4. _gif_lzw_decode raises ValueError (not KeyError) on a corrupt
+3. _gif_lzw_decode raises ValueError (not KeyError) on a corrupt
    first-code-after-clear (operators/multimodal.py).
-5. refresh_mv_from_changefeed refuses to persist negative counts as
+4. refresh_mv_from_changefeed refuses to persist negative counts as
    initial MV state (sources/mv.py).
+
+The snapshot_diff reversed-range test lives in tests/test_snapshots.py.
 """
 
 import pytest
@@ -37,22 +37,6 @@ def test_kmv_null_keys_not_counted(spark):
         r.grp: r for r in kmv_sketch(all_null, "v", ["grp"], k=256).collect()
     }
     assert out2["g"].est_distinct == 0.0
-
-
-def test_snapshot_diff_rejects_reversed_range(spark, tmp_path):
-    from syslog_handler_with_clickhouse_spark.sources.snapshots import (
-        snapshot_diff,
-        write_snapshot,
-    )
-
-    path = str(tmp_path / "snap")
-    df = spark.createDataFrame([(1,)], "v int")
-    write_snapshot(df, path)  # v1
-    write_snapshot(df, path)  # v2
-    with pytest.raises(ValueError, match="v_from < v_to"):
-        snapshot_diff(spark, path, 2, 1)
-    with pytest.raises(ValueError, match="v_from < v_to"):
-        snapshot_diff(spark, path, 1, 1)
 
 
 def test_dict_temp_names_do_not_clobber_user_columns(spark):

@@ -1,10 +1,15 @@
 """Manifest snapshot store: atomic publish, snapshot isolation, time
-travel, transactional rewrite, vacuum."""
+travel, transactional rewrite, vacuum, footer-derived file bounds and the
+recorded schema."""
 
 from __future__ import annotations
 
 import glob
+import math
+import uuid
+from datetime import datetime, timedelta, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from syslog_handler_with_clickhouse_spark.sources.snapshots import (
@@ -418,3 +423,209 @@ def test_vacuum_removes_orphan_stats_manifests(spark, tmp_path):
     # the survivor still prunes
     pruned = sn.read_snapshot(spark, store, prune=("x", 205, 206))
     assert pruned.count() == 10  # single live file overlaps
+
+
+def test_snapshot_diff_rejects_reversed_range(spark, tmp_path):
+    from syslog_handler_with_clickhouse_spark.sources.snapshots import (
+        snapshot_diff,
+        write_snapshot,
+    )
+
+    path = str(tmp_path / "snap")
+    df = spark.createDataFrame([(1,)], "v int")
+    write_snapshot(df, path)  # v1
+    write_snapshot(df, path)  # v2
+    with pytest.raises(ValueError, match="v_from < v_to"):
+        snapshot_diff(spark, path, 2, 1)
+    with pytest.raises(ValueError, match="v_from < v_to"):
+        snapshot_diff(spark, path, 1, 1)
+
+
+# ------------------------------------------- footer bounds, recorded schema
+
+_T0 = datetime(2024, 3, 1, tzinfo=timezone.utc)
+
+
+def _log_rows(hour: int, n: int = 20) -> list[tuple]:
+    return [
+        (_T0 + timedelta(hours=hour, minutes=i), i % 8, f"h{hour} line {i}")
+        for i in range(n)
+    ]
+
+
+_LOG_DDL = "Timestamp timestamp, Severity int, Message string"
+
+
+def _stats_rows(spark, store):
+    from syslog_handler_with_clickhouse_spark.sources import snapshots as sn
+
+    m = sn._read_manifest(store, sn.latest_version(store))
+    return spark.read.schema(sn._STATS_SCHEMA).parquet(
+        *[f"{store}/_manifests/{s}" for s in m["stats_files"]]
+    ).collect()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs run by ``fn``, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_timestamp_prune_keeps_one_file(spark, tmp_path):
+    """Timestamp bounds come from the INT64 footers: three commits of
+    disjoint hours, a prune inside one hour reads exactly that file and
+    returns the same rows as the unpruned filter."""
+    store = str(tmp_path / "ts")
+    for hour in (0, 1, 2):
+        write_snapshot(
+            spark.createDataFrame(_log_rows(hour), _LOG_DDL).coalesce(1),
+            store,
+            stat_cols=["Timestamp"],
+        )
+    lo, hi = _T0 + timedelta(hours=1, minutes=5), _T0 + timedelta(hours=1, minutes=9)
+    full = read_snapshot(spark, store)
+    pruned = read_snapshot(spark, store, prune=("Timestamp", lo, hi))
+    assert len(full.inputFiles()) == 3
+    assert len(pruned.inputFiles()) == 1
+
+    def rows(d):
+        sel = d.filter(F.col("Timestamp").between(lo, hi))
+        return sorted(sel.collect())
+
+    assert rows(pruned) == rows(full) and len(rows(full)) == 5
+    # naive datetimes convert the way Spark's literals do
+    naive = read_snapshot(
+        spark,
+        store,
+        prune=("Timestamp", datetime.fromtimestamp(lo.timestamp()),
+               datetime.fromtimestamp(hi.timestamp())),
+    )
+    assert naive.inputFiles() == pruned.inputFiles()
+    # timestamps and integers share the BIGINT stats lane: refuse the mix
+    with pytest.raises(ValueError, match="'Timestamp'.*datetime"):
+        read_snapshot(spark, store, prune=("Timestamp", 0, 10**18))
+    with pytest.raises(ValueError, match="'Severity'.*numeric"):
+        read_snapshot(spark, store, prune=("Severity", lo, hi))
+
+
+def test_int96_timestamp_records_no_bound_and_is_kept(spark, tmp_path):
+    """A file written as INT96 (a session without the INT64 conf) has no
+    footer min/max: it records no bound, and every prune keeps it."""
+    store = str(tmp_path / "int96")
+    legacy = spark.newSession()
+    legacy.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    write_snapshot(
+        legacy.createDataFrame(_log_rows(0), _LOG_DDL).coalesce(1),
+        store,
+        stat_cols=["Timestamp"],
+    )
+    write_snapshot(
+        spark.createDataFrame(_log_rows(5), _LOG_DDL).coalesce(1),
+        store,
+        stat_cols=["Timestamp"],
+    )
+    recorded = [r.stats_i.get("Timestamp") for r in _stats_rows(spark, store)]
+    assert sorted(b is None for b in recorded) == [False, True]
+    far = (_T0 + timedelta(days=9), _T0 + timedelta(days=10))
+    pruned = read_snapshot(spark, store, prune=("Timestamp", *far))
+    assert len(pruned.inputFiles()) == 1  # the INT96 file: must-read
+    assert pruned.filter(F.col("Timestamp").between(*far)).count() == 0
+
+
+_BIG = "x" * 5000  # over parquet-mr's 4 KiB binary stats limit
+_NAN = float("nan")
+
+
+@pytest.mark.parametrize(
+    "ddl, values, expect",
+    [
+        ("bigint", [5, -(2**62), None, 2**62 + 1], "exact"),
+        ("int", [None, 7, 3], "exact"),
+        ("double", [1.5, None, -2.0, 0.0], "exact"),
+        ("double", [_NAN, 2.5, None, -1.0], "any"),
+        ("double", [2.5, -1.0, _NAN], "any"),
+        ("float", [None, 0.25, -3.5], "exact"),
+        ("timestamp", [_T0, None, _T0 + timedelta(microseconds=1)], "exact"),
+        ("string", ["mike", None, "alpha", "zulu é"], "exact"),
+        ("string", ["b", _BIG, "a"], "any"),
+        ("string", [None, None], "absent"),
+        ("string", "SELECT cast(X'61FF' AS string) c UNION ALL SELECT 'b'", "absent"),
+        ("bigint", [None, None], "absent"),
+    ],
+)
+def test_footer_bounds_never_narrower(spark, tmp_path, ddl, values, expect):
+    """A recorded [lo, hi] must contain the data's true min/max in Spark's
+    order (NaN above every number); absent is always safe."""
+    store = str(tmp_path / "bounds")
+    if isinstance(values, str):  # SQL, for values Python cannot pass
+        df = spark.sql(values).coalesce(1)
+    else:
+        df = spark.createDataFrame([(v,) for v in values], f"c {ddl}").coalesce(1)
+    write_snapshot(df, store, stat_cols=["c"])
+    (row,) = _stats_rows(spark, store)
+    lanes = (row.stats_i, row.stats_d, row.stats_s)
+    bound = next((lane["c"] for lane in lanes if lane and "c" in lane), None)
+    if expect == "absent":
+        assert bound is None
+        return
+    key = F.unix_micros("c") if ddl == "timestamp" else F.col("c")
+    true_lo, true_hi = df.agg(F.min(key), F.max(key)).first()
+    if expect == "exact":
+        assert bound == [true_lo, true_hi]
+    if bound is not None:
+        lo, hi = bound
+        assert lo <= true_lo, (bound, true_lo)
+        # a NaN true max fails this unless the bound is absent
+        assert not (isinstance(true_hi, float) and math.isnan(true_hi)) and true_hi <= hi
+
+
+def test_append_must_match_recorded_schema(spark, tmp_path):
+    """The manifest records the written schema; an append with another
+    column name or type is refused, naming the column.  Nullability
+    alone may differ (stream micro-batches vs batch frames)."""
+    store = str(tmp_path / "schema")
+    write_snapshot(spark.range(3).withColumnRenamed("id", "x"), store)  # x NOT NULL
+    write_snapshot(spark.createDataFrame([(None,)], "x bigint"), store)
+    with pytest.raises(ValueError, match="'x' is int"):
+        write_snapshot(spark.createDataFrame([(1,)], "x int"), store)
+    with pytest.raises(ValueError, match="'y'"):
+        write_snapshot(spark.createDataFrame([(1, 2)], "x bigint, y bigint"), store)
+    # overwrite starts a fresh schema
+    write_snapshot(spark.createDataFrame([(1,)], "x int"), store, mode="overwrite")
+    assert read_snapshot(spark, store).schema.simpleString() == "struct<x:int>"
+
+
+def test_commit_and_read_job_counts(spark, tmp_path):
+    """A stat_cols-only commit runs only the data write's jobs; a bloom
+    commit still runs its bloom job and still prunes; a read with the
+    recorded schema runs no job (≤ 32 files: no parallel listing)."""
+    rows = [(_T0 + timedelta(seconds=i), i, f"k{i}") for i in range(400)]
+    df = spark.createDataFrame(rows, "Timestamp timestamp, id long, key string").repartition(4)
+    base = str(tmp_path / "plain")
+    stats = str(tmp_path / "stats")
+    bloom = str(tmp_path / "bloom")
+    n_plain = _jobs(spark, lambda: write_snapshot(df, base))
+    n_stats = _jobs(
+        spark, lambda: write_snapshot(df, stats, stat_cols=["Timestamp", "id", "key"])
+    )
+    assert n_plain >= 1 and n_stats == n_plain
+    assert any(r.stats_i for r in _stats_rows(spark, stats))
+    n_bloom = _jobs(
+        spark, lambda: write_snapshot(df, bloom, stat_cols=["id"], bloom_cols=["key"])
+    )
+    assert n_bloom > n_plain
+    full = read_snapshot(spark, bloom)
+    hit = read_snapshot(spark, bloom, bloom=("key", "k42"))
+    assert len(hit.inputFiles()) < len(full.inputFiles())
+    assert hit.filter(F.col("key") == "k42").count() == 1
+    for _ in range(3):
+        write_snapshot(df, stats, stat_cols=["Timestamp"])
+    assert len(read_snapshot(spark, stats).inputFiles()) <= 32
+    assert _jobs(spark, lambda: read_snapshot(spark, stats)) == 0
