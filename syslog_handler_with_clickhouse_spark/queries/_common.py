@@ -30,6 +30,7 @@ from ..functions import geo as _geo
 from ..operators import dedup, multimodal, similarity
 from ..operators.joins import asof_join
 from ..operators.topk import global_top_k, top_k_per_group
+from ..schema import FIXTURE_SCHEMAS
 from ..sources.testdata import load_table, normalize_events_ts
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -139,30 +140,25 @@ _STREAM_DIRS: dict[str, str] = {}  # sf_dir → symlink dir for the file source
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events fixture as a REAL file-source stream (same ts
-    normalization as the batch loader, schema pinned from the parquet
-    footer).
+    """The events fixture as a REAL file-source stream (same declared
+    schema and ts normalization as the batch loader).
 
     The file streaming source requires a directory, and the fixture is a
     single read-only file — so stream from a temp dir holding a symlink
     to it (one dir per sf_dir, reused across calls)."""
     import os
-    import tempfile
 
     from ..session import apply_runtime_conf
-    from ..sources.testdata import reset_nanos_conf_if_unneeded, set_nanos_conf
 
     apply_runtime_conf(spark)
-    set_nanos_conf(spark)
-    path = os.path.join(sf_dir, "events.parquet")
     if sf_dir not in _STREAM_DIRS:
         d = scratch_dir("events_stream_")
-        os.symlink(path, os.path.join(d, "events.parquet"))
+        os.symlink(
+            os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet")
+        )
         _STREAM_DIRS[sf_dir] = d
-    schema = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(schema).parquet(_STREAM_DIRS[sf_dir])
-    reset_nanos_conf_if_unneeded(spark, raw)
-    return normalize_events_ts(raw)
+    raw = spark.readStream.schema(FIXTURE_SCHEMAS["events"])
+    return normalize_events_ts(raw.parquet(_STREAM_DIRS[sf_dir]))
 
 
 def _run_stream(agg: DataFrame, mode: str) -> str:

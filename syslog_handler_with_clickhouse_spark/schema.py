@@ -1,8 +1,11 @@
 """Static schemas and constants.
 
 The reference's single record type ``LogData`` (`lib/lopParse.go:21-27`)
-maps to one fixed StructType — no schema inference anywhere, mirroring the
-reference's fixed-struct model (SURVEY §1.2).
+maps to one fixed StructType, mirroring the reference's fixed-struct model
+(SURVEY §1.2).  The fixture tables are declared here too
+(``FIXTURE_SCHEMAS``), so reading them runs no footer-inference job.  A
+fixture regeneration that changes a column must update ``FIXTURE_SCHEMAS``;
+``tests/test_fixture_schema.py`` fails on any drift and names the column.
 """
 
 from __future__ import annotations
@@ -69,16 +72,84 @@ RAW_SCHEMA = T.StructType(
 
 MAX_DATAGRAM_BYTES = 40_960  # `main.go:38`
 
-# Fixture tables generated by the driver (TESTDATA.md / FIXTURES.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# Fixture tables (TESTDATA.md / FIXTURES.md), exactly as Spark infers them
+# from the Parquet footers: every column nullable, and the three timestamp
+# columns stored without a TZ annotation, so they surface as timestamp_ntz
+# (``sources/testdata.normalize_events_ts`` casts ``events.ts``).
+
+
+def _columns(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype) for name, dtype in cols])
+
+
+_INT, _BIGINT, _DOUBLE = T.IntegerType(), T.LongType(), T.DoubleType()
+_STRING, _TS_NTZ = T.StringType(), T.TimestampNTZType()
+
+FIXTURE_SCHEMAS: dict[str, T.StructType] = {
+    "region": _columns(("r_regionkey", _INT), ("r_name", _STRING)),
+    "nation": _columns(("n_nationkey", _INT), ("n_name", _STRING), ("n_regionkey", _INT)),
+    "customer": _columns(
+        ("c_custkey", _BIGINT),
+        ("c_name", _STRING),
+        ("c_nationkey", _INT),
+        ("c_acctbal", _DOUBLE),
+        ("c_mktsegment", _STRING),
+    ),
+    "supplier": _columns(
+        ("s_suppkey", _BIGINT),
+        ("s_name", _STRING),
+        ("s_nationkey", _INT),
+        ("s_acctbal", _DOUBLE),
+    ),
+    "part": _columns(
+        ("p_partkey", _BIGINT),
+        ("p_name", _STRING),
+        ("p_brand", _STRING),
+        ("p_type", _STRING),
+        ("p_size", _INT),
+        ("p_retailprice", _DOUBLE),
+    ),
+    "orders": _columns(
+        ("o_orderkey", _BIGINT),
+        ("o_custkey", _BIGINT),
+        ("o_orderstatus", _STRING),
+        ("o_totalprice", _DOUBLE),
+        ("o_orderdate", _TS_NTZ),
+        ("o_orderpriority", _STRING),
+    ),
+    "lineitem": _columns(
+        ("l_orderkey", _BIGINT),
+        ("l_partkey", _BIGINT),
+        ("l_suppkey", _BIGINT),
+        ("l_linenumber", _INT),
+        ("l_quantity", _DOUBLE),
+        ("l_extendedprice", _DOUBLE),
+        ("l_discount", _DOUBLE),
+        ("l_tax", _DOUBLE),
+        ("l_returnflag", _STRING),
+        ("l_linestatus", _STRING),
+        ("l_shipdate", _TS_NTZ),
+    ),
+    "events": _columns(
+        ("event_id", _BIGINT),
+        ("ts", _TS_NTZ),
+        ("user_id", _BIGINT),
+        ("event_type", _STRING),
+        ("value", _DOUBLE),
+        ("props", _STRING),
+    ),
+    "documents": _columns(
+        ("doc_id", _BIGINT),
+        ("text", _STRING),
+        ("lang", _STRING),
+        ("source", _STRING),
+        ("n_chars", _BIGINT),
+    ),
+    "embeddings": _columns(
+        ("vec_id", _BIGINT),
+        ("embedding", T.ArrayType(T.FloatType())),
+        ("label", _INT),
+    ),
+}
+
+TESTDATA_TABLES = tuple(FIXTURE_SCHEMAS)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schema import LOG_SCHEMA
+
 LOGS_PARTITION_COL = "log_date"
 
 
@@ -44,7 +46,10 @@ def write_logs_batch(df: DataFrame, path: str, mode: str = "append") -> None:
 
 
 def read_logs(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop(LOGS_PARTITION_COL)
+    """Read a ``write_logs_batch`` store with ``LOG_SCHEMA`` declared (no
+    footer-inference job); ``log_date`` is still discovered from the
+    partition paths, and dropped."""
+    return spark.read.schema(LOG_SCHEMA).parquet(path).drop(LOGS_PARTITION_COL)
 
 
 def compact_parquet(

@@ -709,39 +709,38 @@ def snapshot_diff(spark, path: str, v_from: int, v_to: int) -> DataFrame:
 
     ``v_from`` must be strictly older than ``v_to``: a reversed range
     would silently swap the insert/delete labels, so it raises instead
-    (callers wanting the inverse diff should swap args and relabel)."""
+    (callers wanting the inverse diff should swap args and relabel).
+    Each side is read with its manifest's recorded schema (no
+    footer-inference job); older manifests infer it as before."""
     from pyspark.sql import functions as F
 
     if v_from >= v_to:
         raise ValueError(
             f"snapshot_diff requires v_from < v_to, got {v_from} >= {v_to}"
         )
-    ma = _read_manifest(path, v_from)["files"]
-    mb = _read_manifest(path, v_to)["files"]
-    names_a = {e["name"] for e in ma}
-    names_b = {e["name"] for e in mb}
+    ma = _read_manifest(path, v_from)
+    mb = _read_manifest(path, v_to)
+    names_a = {e["name"] for e in ma["files"]}
+    names_b = {e["name"] for e in mb["files"]}
     only_a = sorted(names_a - names_b)
     only_b = sorted(names_b - names_a)
     ddir = _data_dir(path)
 
-    def read_files(names, like):
-        if names:
-            return spark.read.parquet(
-                *[os.path.join(ddir, n) for n in names]
-            )
-        # empty side: preserve schema from any file of the other set
-        return spark.read.parquet(
-            *[os.path.join(ddir, n) for n in like]
-        ).limit(0)
+    def read_files(names, m):
+        """``names`` read with manifest ``m``'s recorded schema, if any."""
+        reader = spark.read
+        if m.get("schema"):
+            reader = reader.schema(StructType.fromJson(json.loads(m["schema"])))
+        return reader.parquet(*[os.path.join(ddir, n) for n in names])
 
     if not only_a and not only_b:
-        base = sorted(names_a) or sorted(names_b)
-        empty = read_files([], base) if base else None
-        if empty is None:
+        if not (names_a or names_b):
             raise FileNotFoundError(f"both snapshots at {path} are empty")
+        empty = read_files(sorted(names_a or names_b), ma if names_a else mb)
         return empty.withColumn("_change_type", F.lit("insert")).limit(0)
-    a = read_files(only_a, only_b)
-    b = read_files(only_b, only_a)
+    # an empty side keeps the schema of the other side's files
+    a = read_files(only_a, ma) if only_a else read_files(only_b, mb).limit(0)
+    b = read_files(only_b, mb) if only_b else read_files(only_a, ma).limit(0)
     inserted = b.exceptAll(a).withColumn("_change_type", F.lit("insert"))
     deleted = a.exceptAll(b).withColumn("_change_type", F.lit("delete"))
     return inserted.unionByName(deleted)

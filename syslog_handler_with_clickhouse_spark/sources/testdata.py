@@ -1,9 +1,11 @@
 """Loaders for the driver-generated fixture tables (TESTDATA.md).
 
 Batch scans of columnar parquet — the Spark analogue of querying the
-ClickHouse table the reference feeds (`lib/cacheManage.go:40`).  Reading via
-``spark.read.parquet`` keeps predicate pushdown / column pruning available
-to every downstream query.
+ClickHouse table the reference feeds (`lib/cacheManage.go:40`).  Each
+table is read with its schema declared from ``schema.FIXTURE_SCHEMAS``, so
+a load runs no footer-inference job; predicate pushdown and column pruning
+stay available to every downstream query.  A fixture regeneration must
+update ``FIXTURE_SCHEMAS``; ``tests/test_fixture_schema.py`` fails on drift.
 """
 
 from __future__ import annotations
@@ -12,68 +14,38 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schema import TESTDATA_TABLES
+from ..schema import FIXTURE_SCHEMAS, TESTDATA_TABLES
 from ..session import apply_runtime_conf
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
-    """Normalize the ``ts`` column of an events scan to session-TZ
-    TimestampType regardless of how the fixture generation stored it.
+    """Cast the ``ts`` column of an events scan to session-TZ TimestampType.
 
-    Fixture generations have stored ``ts`` three ways:
-
-    - TIMESTAMP(NANOS): Spark 4 rejects it ([PARQUET_TYPE_ILLEGAL]); with
-      ``spark.sql.legacy.parquet.nanosAsLong`` it surfaces as int64 nanos,
-      truncated here to microseconds — DuckDB's reader truncates ns → µs
-      identically, so oracle parity is exact.
-    - TIMESTAMP(MICROS) with no TZ annotation: surfaces as TIMESTAMP_NTZ,
-      which ltz-only functions (``unix_millis``/``unix_micros``) and
-      streaming watermarks reject — cast to TimestampType.  The session TZ
-      is pinned UTC (``apply_runtime_conf``), so wall-clock values and every
-      downstream ``date_format``/oracle hash are unchanged.
-    - TIMESTAMP(MICROS, isAdjustedToUTC): already TimestampType; no-op.
+    The fixture stores ``ts`` as TIMESTAMP(MICROS) with no TZ annotation,
+    which surfaces as TIMESTAMP_NTZ; ltz-only functions
+    (``unix_millis``/``unix_micros``) and streaming watermarks reject it.
+    The session TZ is pinned UTC (``apply_runtime_conf``), so wall-clock
+    values and every downstream ``date_format``/oracle hash are unchanged.
+    An already-TimestampType ``ts`` is left as is.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
+    from pyspark.sql.types import TimestampNTZType
 
-    dtype = df.schema["ts"].dataType
-    if isinstance(dtype, LongType):
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(dtype, TimestampNTZType):
+    if isinstance(df.schema["ts"].dataType, TimestampNTZType):
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
-def set_nanos_conf(spark: SparkSession) -> None:
-    """nanosAsLong is a no-op for µs fixtures; needed so ns fixtures
-    surface as int64 instead of failing the scan outright."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-
-def reset_nanos_conf_if_unneeded(spark: SparkSession, df: DataFrame) -> None:
-    """Don't leave the legacy conf set on the shared session: a later
-    TIMESTAMP(NANOS) parquet read anywhere else would silently surface as
-    int64.  Only safe to unset when THIS read didn't need it (ts is not
-    int64) — an ns fixture's lazy execution re-checks the conf at scan
-    time, so for those the conf must stay set."""
-    from pyspark.sql.types import LongType
-
-    if not isinstance(df.schema["ts"].dataType, LongType):
-        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TESTDATA_TABLES:
+    if name not in FIXTURE_SCHEMAS:
         raise KeyError(f"unknown fixture table {name!r}; one of {TESTDATA_TABLES}")
     apply_runtime_conf(spark)  # UTC session time for oracle parity
-    if name == "events":
-        set_nanos_conf(spark)
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        reset_nanos_conf_if_unneeded(spark, df)
-        return normalize_events_ts(df)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -30,6 +30,27 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: the Spark jobs run by ``fn()``, counted through
+    a job group on the session's status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import glob
 import math
-import uuid
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -207,13 +206,16 @@ def test_bloom_integral_column_no_false_negative(spark, tmp_path):
     assert got.count() == 201  # file kept (value present)
 
 
-def test_snapshot_diff_reads_only_changed_files(spark, tmp_path):
+def test_snapshot_diff_reads_only_changed_files(spark, tmp_path, count_jobs):
     """The CDC diff must (a) produce exactly the inserted/deleted rows
     and (b) prove the file-level skip: appending a slice leaves v1's
-    files untouched, so diff(v1, v2) reads ONLY the new files."""
+    files untouched, so diff(v1, v2) reads ONLY the new files.  Both
+    sides are read with the manifests' recorded schema: building the
+    diff runs no inference job, and its schema is the inferred one."""
     from pyspark.sql import functions as F
 
     from syslog_handler_with_clickhouse_spark.sources.snapshots import (
+        _data_dir,
         _read_manifest,
         snapshot_diff,
         write_snapshot,
@@ -231,7 +233,11 @@ def test_snapshot_diff_reads_only_changed_files(spark, tmp_path):
     m1 = {e["name"] for e in _read_manifest(path, 1)["files"]}
     m2 = {e["name"] for e in _read_manifest(path, 2)["files"]}
     assert m1 < m2  # append keeps v1 files — immutability
-    feed = snapshot_diff(spark, path, 1, 2)
+    feeds = []
+    assert count_jobs(lambda: feeds.append(snapshot_diff(spark, path, 1, 2))) == 0
+    feed = feeds[0]
+    inferred = spark.read.parquet(*[f"{_data_dir(path)}/{n}" for n in sorted(m2 - m1)])
+    assert feed.drop("_change_type").schema == inferred.schema
     rows = feed.collect()
     assert all(r._change_type == "insert" for r in rows)
     assert sorted(r.k for r in rows) == list(range(100, 130))
@@ -465,19 +471,6 @@ def _stats_rows(spark, store):
     ).collect()
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs run by ``fn``, counted through a job group."""
-    sc = spark.sparkContext
-    group = f"pin-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_timestamp_prune_keeps_one_file(spark, tmp_path):
     """Timestamp bounds come from the INT64 footers: three commits of
     disjoint hours, a prune inside one hour reads exactly that file and
@@ -602,7 +595,7 @@ def test_append_must_match_recorded_schema(spark, tmp_path):
     assert read_snapshot(spark, store).schema.simpleString() == "struct<x:int>"
 
 
-def test_commit_and_read_job_counts(spark, tmp_path):
+def test_commit_and_read_job_counts(spark, tmp_path, count_jobs):
     """A stat_cols-only commit runs only the data write's jobs; a bloom
     commit still runs its bloom job and still prunes; a read with the
     recorded schema runs no job (≤ 32 files: no parallel listing)."""
@@ -611,14 +604,14 @@ def test_commit_and_read_job_counts(spark, tmp_path):
     base = str(tmp_path / "plain")
     stats = str(tmp_path / "stats")
     bloom = str(tmp_path / "bloom")
-    n_plain = _jobs(spark, lambda: write_snapshot(df, base))
-    n_stats = _jobs(
-        spark, lambda: write_snapshot(df, stats, stat_cols=["Timestamp", "id", "key"])
+    n_plain = count_jobs(lambda: write_snapshot(df, base))
+    n_stats = count_jobs(
+        lambda: write_snapshot(df, stats, stat_cols=["Timestamp", "id", "key"])
     )
     assert n_plain >= 1 and n_stats == n_plain
     assert any(r.stats_i for r in _stats_rows(spark, stats))
-    n_bloom = _jobs(
-        spark, lambda: write_snapshot(df, bloom, stat_cols=["id"], bloom_cols=["key"])
+    n_bloom = count_jobs(
+        lambda: write_snapshot(df, bloom, stat_cols=["id"], bloom_cols=["key"])
     )
     assert n_bloom > n_plain
     full = read_snapshot(spark, bloom)
@@ -628,4 +621,4 @@ def test_commit_and_read_job_counts(spark, tmp_path):
     for _ in range(3):
         write_snapshot(df, stats, stat_cols=["Timestamp"])
     assert len(read_snapshot(spark, stats).inputFiles()) <= 32
-    assert _jobs(spark, lambda: read_snapshot(spark, stats)) == 0
+    assert count_jobs(lambda: read_snapshot(spark, stats)) == 0

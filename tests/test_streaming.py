@@ -62,6 +62,32 @@ def test_ingest_end_to_end(spark, tmp_path):
     assert read_logs(spark, store).count() == len(LINES_A) + len(LINES_B)
 
 
+def test_read_logs_declares_log_schema(spark, tmp_path, count_jobs):
+    """``read_logs`` declares LOG_SCHEMA (no inference job) and still
+    discovers ``log_date`` from the paths: same schema and rows as an
+    inferred read of the same store."""
+    import datetime
+
+    from syslog_handler_with_clickhouse_spark.functions.parse import parsed_logs
+    from syslog_handler_with_clickhouse_spark.sources.sinks import write_logs_batch
+
+    lines = LINES_A + LINES_B
+    rows = [
+        (line, f"10.0.0.{i % 2}:5514", datetime.datetime(2024, 1, 1 + i % 3, 12, i))
+        for i, line in enumerate(lines)
+    ]
+    df = spark.createDataFrame(rows, "raw string, device string, clock timestamp")
+    store = str(tmp_path / "logs")
+    write_logs_batch(parsed_logs(df, clock_col="clock"), store)
+
+    frames = []
+    assert count_jobs(lambda: frames.append(read_logs(spark, store))) == 0
+    inferred = spark.read.parquet(store).drop("log_date")
+    assert frames[0].schema == inferred.schema
+    assert sorted(frames[0].collect()) == sorted(inferred.collect())
+    assert frames[0].count() == len(lines)
+
+
 def test_streaming_window_agg(spark, tmp_path):
     """Windowed aggregation running in a real streaming query (memory sink)."""
     src = str(tmp_path / "in2")
